@@ -32,6 +32,8 @@ from typing import Dict, List, Tuple
 
 import pandas as pd
 
+from .util import as_list
+
 SEED = 42
 PRED = "supplies_to"
 
@@ -127,7 +129,7 @@ def linking_probe_surfaces(companies: pd.DataFrame) -> List[str]:
     surfaces: List[str] = []
     for rec in companies.itertuples(index=False):
         surfaces.append(rec.canonical_name)
-        surfaces.extend(list(rec.aliases or []))
+        surfaces.extend(as_list(rec.aliases))
         words = rec.canonical_name.split()
         if len(words) >= 3:
             surfaces.append(" ".join(words[:-1]) + " Holdings")

@@ -68,10 +68,9 @@ def link_triples(
     (plans/pipeline.py max_broadcast_dict_rows): broadcast hint below
     max_broadcast_rows, plain equi-join (AQE picks the strategy) above.
 
-    broadcast=None counts the map to decide — callers on the hot path should
-    persist the map first (plans/pipeline.py does) so the count materializes
-    the cache instead of re-running the linking lineage, or pass the
-    decision explicitly."""
+    broadcast=None counts the map to decide — pass materialized rows
+    (canonicalize_unmatched's result is) so the count does not re-run the
+    linking lineage, or pass the decision explicitly."""
     if broadcast is None:
         broadcast = surface_to_entity.count() <= max_broadcast_rows
     s2e = F.broadcast(surface_to_entity) if broadcast else surface_to_entity

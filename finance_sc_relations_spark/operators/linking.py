@@ -46,6 +46,8 @@ from pyspark.sql.types import (
 )
 
 from ..functions.similarity import HashEmbedder
+from ..util import as_list
+from .cc import cc_min_label
 
 _PUNCT_RE = f"[{re.escape(string.punctuation)}]"
 
@@ -131,26 +133,42 @@ def _sort_mask(form_sorts: np.ndarray, surface: str) -> np.ndarray:
     return mask
 
 
-def _cands_from_sims(sims, items, cand_thresh, match_thresh, top_k):
-    """top_k (name, entity_id, score) with cand_thresh <= score <
-    match_thresh — the reference's matches/candidates split
-    (reporter.py:224-227). Match-level items are matches, never
-    candidates. Shared by both linking tiers so they emit identical lists."""
-    cands = []
-    # stable sort: exact score ties (identical alias forms from different
-    # entities encode to identical vectors) must break by ascending block
-    # index, matching the independent oracle's (-score, index) order —
-    # quicksort's unstable tie order could otherwise admit a different
-    # tied form when a tie straddles the top_k cutoff
-    for idx in np.argsort(-sims, kind="stable"):
-        s = float(sims[idx])
-        if s < cand_thresh or len(cands) >= top_k:
-            break
-        if s >= match_thresh:
-            continue
-        entity_id, canonical, form = items[idx]
-        cands.append({"name": form, "entity_id": entity_id, "score": s})
-    return cands
+def _link_row(surface, exact, sims, items, cand_thresh, match_thresh, top_k):
+    """One LINKED_SCHEMA row for `surface`, shared by both linking tiers so
+    they emit identical rows. sims: cosines against the eligible `items`
+    (entity_id, canonical, form), which are in (form, entity_id) order.
+
+    Candidates are the top_k items with cand_thresh <= score < match_thresh
+    — the reference's matches/candidates split (reporter.py:224-227);
+    match-level items are matches, never candidates. An exact hit (score
+    1.0) beats the best fuzzy match, which needs score >= match_thresh.
+
+    Ranking uses the score rounded to 1e-6: the last float32 bits of a
+    cosine depend on the matmul's shape and BLAS kernel (the broadcast
+    tier's matvec and the distributed tier's block matmul differ there),
+    so equal rounded scores break by block order, i.e. by (form,
+    entity_id), the same way in both tiers."""
+    cands: list = []
+    best = None
+    if len(items):
+        order = np.argsort(-np.round(sims.astype(np.float64), 6), kind="stable")
+        for idx in order:
+            s = float(sims[idx])
+            if s < cand_thresh or len(cands) >= top_k:
+                break
+            if s >= match_thresh:
+                continue
+            entity_id, canonical, form = items[idx]
+            cands.append({"name": form, "entity_id": entity_id, "score": s})
+        b = order[0]
+        if sims[b] >= match_thresh:
+            best = (items[b][0], items[b][1], float(sims[b]))
+    hit = exact.get(surface)
+    if hit is not None:
+        return (surface, hit[0], hit[1], 1.0, cands)
+    if best is not None:
+        return (surface, *best, cands)
+    return (surface, None, None, None, cands)
 
 
 def link_surfaces(
@@ -185,7 +203,7 @@ def link_surfaces(
     rows = []
     for rec in dict_pdf.itertuples(index=False):
         rows.append((rec.entity_id, rec.canonical_name, rec.prefix2, rec.canonical_name))
-        for alias in list(rec.aliases or []):
+        for alias in as_list(rec.aliases):
             rows.append((rec.entity_id, rec.canonical_name, _prefix2(alias), alias))
     # (form, entity_id) order ON THE DRIVER, once — exact ties (two entities
     # sharing a form/alias) resolve to the min entity_id, identical to the
@@ -235,31 +253,16 @@ def link_surfaces(
             surf_vecs = embedder.encode(surfaces) if surfaces else None
             for i, surface in enumerate(surfaces):
                 p = _prefix2(surface)
-                items = by_prefix.get(p)
-                cands: list = []
-                best_item = None
-                best_score = None
-                if items:
-                    mask = _sort_mask(prefix_sorts[p], surface)
-                    if mask.any():
-                        idxs = np.flatnonzero(mask)
-                        sims = prefix_emb[p][idxs] @ surf_vecs[i]
-                        cands = _cands_from_sims(
-                            sims, [items[j] for j in idxs],
-                            cand_thresh, match_thresh, top_k,
-                        )
-                        b = int(np.argmax(sims))
-                        if sims[b] >= match_thresh:
-                            best_item, best_score = items[idxs[b]], float(sims[b])
-                hit = exact.get(surface)
-                if hit is not None:
-                    out.append((surface, hit[0], hit[1], 1.0, cands))
-                elif best_item is not None:
-                    out.append(
-                        (surface, best_item[0], best_item[1], best_score, cands)
-                    )
-                else:
-                    out.append((surface, None, None, None, cands))
+                items = by_prefix.get(p, [])
+                idxs = (
+                    np.flatnonzero(_sort_mask(prefix_sorts[p], surface))
+                    if items else []
+                )
+                sims = prefix_emb[p][idxs] @ surf_vecs[i] if len(idxs) else None
+                out.append(_link_row(
+                    surface, exact, sims, [items[j] for j in idxs],
+                    cand_thresh, match_thresh, top_k,
+                ))
             yield pd.DataFrame(
                 out,
                 columns=["surface", "entity_id", "matched_name", "link_score",
@@ -356,29 +359,11 @@ def link_surfaces_distributed(
         # (the r2 shape encoded and matvec'd per surface in a Python loop)
         sims_all = embedder.encode(surfaces) @ block_emb.T
         for i, surface in enumerate(surfaces):
-            mask = _sort_mask(form_sorts, surface)
-            cands: list = []
-            best_item = None
-            best_score = None
-            if mask.any():
-                idxs = np.flatnonzero(mask)
-                sims = sims_all[i][idxs]
-                cands = _cands_from_sims(
-                    sims, [items[j] for j in idxs],
-                    cand_thresh, match_thresh, top_k,
-                )
-                b = int(np.argmax(sims))
-                if sims[b] >= match_thresh:
-                    best_item, best_score = items[idxs[b]], float(sims[b])
-            hit = exact.get(surface)
-            if hit is not None:
-                out.append((surface, hit[0], hit[1], 1.0, cands))
-            elif best_item is not None:
-                out.append(
-                    (surface, best_item[0], best_item[1], best_score, cands)
-                )
-            else:
-                out.append((surface, None, None, None, cands))
+            idxs = np.flatnonzero(_sort_mask(form_sorts, surface))
+            out.append(_link_row(
+                surface, exact, sims_all[i][idxs], [items[j] for j in idxs],
+                cand_thresh, match_thresh, top_k,
+            ))
         return pd.DataFrame(
             out,
             columns=["surface", "entity_id", "matched_name", "link_score",
@@ -418,58 +403,49 @@ def canonicalize_unmatched(
     contains a dictionary-matched surface inherits that surface's LEI;
     components with no dictionary anchor get
     'SF:<min-normalized-form-in-component>'.
-    """
-    matched = linked.filter(F.col("entity_id").isNotNull()).select(
-        "surface", "entity_id"
-    )
-    unmatched = linked.filter(F.col("entity_id").isNull()).select("surface")
 
+    `linked` is read exactly once, so the linking UDF behind it runs once:
+    every surface is labeled in one projection and materialized by an eager
+    localCheckpoint, and the empty check, the CC seeds and labels, and every
+    reader of the result use those rows. The result is materialized rows,
+    cheap to count and join repeatedly. Like cc_min_label's rounds, the
+    checkpoint cuts lineage: a lost executor's blocks are not recomputed.
+    """
     # label = struct(pri, val, rep). pri 0 = dictionary LEI, pri 1 =
     # normalized surface form; F.min over the struct orders field-by-field,
     # so a dictionary id always beats any SF label within a component.
     # rep = the surface that CARRIES this label — the pointer the jump step
     # chases; it only tie-breaks among equal (pri, val), so the emitted
     # entity_id (pri/val) is identical to the 2-field formulation.
-    labels = unmatched.select(
+    labels = linked.select(
         "surface",
         F.struct(
-            F.lit(1).alias("pri"),
-            normalized_name_col("surface").alias("val"),
+            F.col("entity_id").isNull().cast("int").alias("pri"),
+            F.coalesce("entity_id", normalized_name_col("surface")).alias("val"),
             F.col("surface").alias("rep"),
         ).alias("label"),
-    )
-    if alias_edges is not None and unmatched.isEmpty():
-        alias_edges = None  # nothing to propagate — skip the iteration loop
-    if alias_edges is not None:
-        from .cc import cc_min_label
-
+    ).localCheckpoint(eager=True)
+    is_lei = F.col("label.pri") == 0
+    if alias_edges is not None and not labels.filter(~is_lei).isEmpty():
         # seeds = dictionary-matched surfaces with FIXED labels: they
         # propagate into the graph every round but are never relabeled (a
         # matched endpoint re-entering as a labeled surface would be
         # emitted twice — its LEI row plus a propagated SF: row — and fan
         # out every downstream triple join; cc_min_label returns only the
         # relabeled `labels` frame, so that cannot happen).
-        seeds = matched.select(
-            "surface",
-            F.struct(
-                F.lit(0).alias("pri"),
-                F.col("entity_id").alias("val"),
-                F.col("surface").alias("rep"),
-            ).alias("label"),
-        )
-        labels = cc_min_label(
+        seeds = labels.filter(is_lei)
+        labels = seeds.unionByName(cc_min_label(
             alias_edges.select("target", "alias"),
-            labels,
+            labels.filter(~is_lei),
             key="surface",
             seeds=seeds,
             label_node=lambda c: c.getField("rep"),
             max_iterations=max_iterations,
             warn_name="canonicalize_unmatched",
-        )
-    resolved = labels.select(
+        ))
+    return labels.select(
         "surface",
-        F.when(F.col("label.pri") == 0, F.col("label.val"))
+        F.when(is_lei, F.col("label.val"))
         .otherwise(F.concat(F.lit("SF:"), F.col("label.val")))
         .alias("entity_id"),
     )
-    return matched.unionByName(resolved)

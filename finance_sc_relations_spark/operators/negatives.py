@@ -95,8 +95,8 @@ def kg_negative_samples(
     it once so an upstream join/extraction subtree is not re-executed per
     consumer (r6: the bench's supply-edges input cost ~6s per re-run, i.e.
     ~2/3 of this operator's wall time). Lineage-keeping persist, not
-    checkpoint: blocks recompute on executor loss and are
-    ContextCleaner-managed."""
+    checkpoint: blocks recompute on executor loss. They are NOT
+    ContextCleaner-managed: the CacheManager holds them until unpersist."""
     from pyspark import StorageLevel
 
     triples = triples.select("r_id", "subj_id", "pred", "obj_id").persist(

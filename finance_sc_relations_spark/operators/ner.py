@@ -58,6 +58,7 @@ from pyspark.sql.types import (
 
 from ..functions.similarity import HashEmbedder
 from ..schemas import ALIAS_PAIR, SPAN
+from ..util import as_list
 
 MENTION_SCHEMA = StructType(
     [
@@ -348,7 +349,7 @@ def detect_mentions(
     forms: List[str] = []
     for _, row in pdf.iterrows():
         forms.append(row["canonical_name"])
-        forms.extend(list(row["aliases"] or []))
+        forms.extend(as_list(row["aliases"]))
     bc = spark.sparkContext.broadcast(forms)
 
     fields = [f for f in MENTION_SCHEMA.fields if include_spans or f.name != "spans"]

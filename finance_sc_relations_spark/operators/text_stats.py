@@ -268,9 +268,9 @@ def token_cooccurrence(
         # AND the dropped count — no second pass over the ranked subtree.
         # persist, NOT localCheckpoint: now that the cap is the DEFAULT this
         # branch runs on every call, and a checkpoint of the corpus-sized
-        # (doc, token) table would be unrecoverable on executor loss —
-        # exactly the failure mode the pipeline's persist swap avoids;
-        # persist keeps lineage and its blocks are ContextCleaner-managed
+        # (doc, token) table would be unrecoverable on executor loss;
+        # persist keeps lineage. Its blocks are NOT ContextCleaner-managed:
+        # the CacheManager holds them until unpersist (or clearCache)
         from pyspark import StorageLevel
 
         ranked = (

@@ -362,8 +362,6 @@ def run_pipeline_checkpointed(
         input_rows=_rows("classified"),
     )
 
-    _linked_cache: dict = {}
-
     def _linked():
         surfaces = (
             triples.select(F.col("subj_surface").alias("surface"))
@@ -383,26 +381,21 @@ def run_pipeline_checkpointed(
                 cand_thresh=cfg.cand_thresh, match_thresh=cfg.match_thresh,
             )
         alias_edges = build_alias_edges(mentions)
-        s2e = canonicalize_unmatched(
-            linked_surfaces, alias_edges.select("target", "alias")
-        ).persist()
-        _linked_cache["s2e"] = s2e
-        # same broadcast-vs-equi-join auto-dispatch as plans.pipeline; the
-        # count materializes the persisted map so both endpoint joins read
-        # cache (explicitly unpersisted after the stage write — persisted
-        # plans are NOT ContextCleaner-managed)
-        out = link_triples(
+        # same broadcast-vs-equi-join auto-dispatch as plans.pipeline;
+        # canonicalize_unmatched returns checkpointed rows, so the dispatch
+        # count and both endpoint joins read them without re-running the
+        # linking UDF, and there is no cache to release afterwards
+        return link_triples(
             triples,
-            s2e.select("surface", "entity_id"),
+            canonicalize_unmatched(
+                linked_surfaces, alias_edges.select("target", "alias")
+            ),
             max_broadcast_rows=cfg.max_broadcast_dict_rows,
         )
-        return out
 
     linked = ckpt.run_stage(
         "linked_triples", _linked, fp, input_rows=_rows("triples")
     )
-    if "s2e" in _linked_cache:  # stage ran (not resumed): release the cache
-        _linked_cache.pop("s2e").unpersist()
     edges = ckpt.run_stage(
         "edges", lambda: build_edges(linked), fp,
         input_rows=_rows("linked_triples"),

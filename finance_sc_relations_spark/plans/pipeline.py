@@ -12,7 +12,7 @@ block_job_files/add_results, src/glue/glue_etl.py:313-444).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -88,7 +88,6 @@ class PipelineConfig:
     # for linking).
     distributed_linking: bool | None = None
     max_broadcast_dict_rows: int = 2_000_000
-    extra: dict = field(default_factory=dict)
 
 
 def run_pipeline(
@@ -201,36 +200,11 @@ def run_pipeline(
         linked_surfaces,
         alias_edges.select("target", "alias"),
     )
-    # surface_to_entity feeds the broadcast-dispatch count AND both endpoint
-    # joins in link_triples — without materialization each action re-executes
-    # the whole linking subtree (measured ~17s per action at 100k pages).
-    # persist, NOT localCheckpoint: checkpoint blocks truncate lineage, so
-    # one lost executor (routine with spot nodes / dynamic allocation at the
-    # web scale this targets) would fail the job instead of recomputing the
-    # lost partitions. persist keeps lineage AND its blocks are still
-    # ContextCleaner-managed (freed when the frame is GC'd), so repeated
-    # run_pipeline calls in a long-lived session don't leak storage; callers
-    # wanting deterministic release can unpersist the returned
-    # surface_to_entity frame themselves. Bounded: one row per distinct
-    # surface. The dispatch count below materializes it eagerly.
-    if cfg.extra.get("surface_materialize") == "checkpoint":
-        # A/B lever (r6, VERDICT #2): eager localCheckpoint truncates
-        # lineage — faster repeat access, but blocks are unrecoverable on
-        # executor loss. Not the default; exists to price the resilience
-        # trade on a pinned workload.
-        surface_to_entity = surface_to_entity.localCheckpoint(eager=True)
-    else:
-        surface_to_entity = surface_to_entity.persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    # auto-dispatch: broadcast the surface map only below the same row
-    # threshold as the dictionary — at web scale the per-distinct-surface map
-    # is ~10^7+ rows and must go through a plain (AQE) equi-join instead.
-    # The dispatch count materializes the persisted map, so the two endpoint
-    # joins read cache rather than re-running the linking subtree.
+    # surface_to_entity is checkpointed rows (canonicalize_unmatched runs the
+    # linking UDF once): link_triples' broadcast-dispatch count and both
+    # endpoint joins read them without re-running the linking subtree.
     linked = link_triples(
-        triples,
-        surface_to_entity.select("surface", "entity_id"),
+        triples, surface_to_entity,
         max_broadcast_rows=cfg.max_broadcast_dict_rows,
     )
     if cfg.persist_intermediate:

@@ -42,3 +42,10 @@ def ensure_parallelism(df: DataFrame, *keys: str) -> DataFrame:
             return df.repartition(target, *[F.col(k) for k in keys])
         return df.repartition(target)
     return df
+
+
+def as_list(values) -> list:
+    """A possibly-null array cell as a list. Array columns reach pandas as
+    numpy arrays (or None), and `arr or []` calls bool() on the array:
+    ambiguous for two or more elements, deprecated for none."""
+    return [] if values is None else list(values)

@@ -519,3 +519,115 @@ def test_distributed_linking_hot_prefix_skew_spread(spark):
     dist = norm(link_surfaces_distributed(surfaces, cd, salt_buckets=salt_buckets))
     bcast = norm(link_surfaces(surfaces, cd.toPandas()))
     assert dist == bcast and len(dist) == 1001
+
+
+def test_link_row_breaks_last_bit_ties_by_form_order():
+    """Two forms whose float32 cosines differ only in the last bits (the
+    same pair scores 0.99382836 as a lone matvec and 0.99382806 inside a
+    larger block matmul) are a tie: the form first in (form, entity_id)
+    order wins the match and the top-k candidate slot, whichever of the
+    two carries the larger bits."""
+    import numpy as np
+
+    from finance_sc_relations_spark.operators.linking import _link_row
+
+    items = [
+        ("LEI000077", "Bluecrest Materials Inc", "Bluecrest Materials Inc"),
+        ("LEI000127", "Bluecrest Materials Ltd", "Bluecrest Materials Ltd"),
+    ]
+    surface = "Bluecrest Materials Holdings"
+    for bits in ([0.99382806, 0.99382836], [0.99382836, 0.99382806]):
+        sims = np.array(bits, dtype=np.float32)
+        assert sims[0] != sims[1]
+        row = _link_row(surface, {}, sims, items, 0.8, 0.95, 5)
+        assert row[1:3] == ("LEI000077", "Bluecrest Materials Inc")
+        cand = _link_row(surface, {}, sims - np.float32(0.1), items,
+                         0.8, 0.95, 1)
+        assert cand[1] is None
+        assert [c["entity_id"] for c in cand[4]] == ["LEI000077"]
+
+
+def test_multi_alias_company_through_ner_and_both_tiers(spark):
+    """Alias arrays reach pandas as numpy arrays once the dictionary has
+    been through toPandas: a company with two aliases (and one with none)
+    must run through detect_mentions and both linking tiers, with no
+    truth-value error and no DeprecationWarning on the driver."""
+    import warnings
+
+    from finance_sc_relations_spark.operators.linking import (
+        link_surfaces_distributed,
+    )
+    from finance_sc_relations_spark.operators.ner import detect_mentions
+    from finance_sc_relations_spark.schemas import COMPANY_DICT, SENTENCES
+
+    cd = spark.createDataFrame(
+        [("LEI1", "Kestrel Aerospace Holdings", "ke", ["Kestrel", "KAH"]),
+         ("LEI2", "Sonexa Materials Inc", "so", [])],
+        COMPANY_DICT,
+    )
+    sentences = spark.createDataFrame(
+        [("u1", "u1#0", 0, "KAH supplies parts to Sonexa Materials Inc.", "en")],
+        SENTENCES,
+    )
+    surfaces = spark.createDataFrame(
+        [("Kestrel Aerospace Holdings",), ("Kestrel",), ("KAH",),
+         ("Sonexa Materials Inc",)],
+        "surface string",
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", DeprecationWarning)
+        mentions = detect_mentions(sentences, cd, include_spans=False)
+        tiers = [link_surfaces(surfaces, cd),
+                 link_surfaces_distributed(surfaces, cd)]
+    (m,) = mentions.collect()
+    assert {"KAH", "Sonexa Materials Inc"} <= set(m["org_groups"])
+    want = {"Kestrel Aerospace Holdings": "LEI1", "Kestrel": "LEI1",
+            "KAH": "LEI1", "Sonexa Materials Inc": "LEI2"}
+    for tier in tiers:
+        got = {r["surface"]: (r["entity_id"], r["link_score"])
+               for r in tier.collect()}
+        assert got == {s: (e, 1.0) for s, e in want.items()}
+
+
+@pytest.mark.parametrize("with_unmatched", [False, True])
+def test_canonicalize_unmatched_scores_each_surface_once(spark, with_unmatched):
+    """canonicalize_unmatched reads its linking input once: forcing its
+    result twice scores every surface exactly once, both when every
+    surface matches the dictionary and on the CC path (unmatched surfaces
+    plus alias edges)."""
+    from finance_sc_relations_spark.operators.linking import LINKED_SCHEMA
+
+    names = ["Sonexa", "Sonexa Corporation",
+             "Quantrix Semiconductors Corporation"]
+    edges = [("Sonexa", "Sonexa Corporation")]
+    if with_unmatched:
+        names += ["Zorblatt Industries Inc", "Zorblatt", "Lonely Startup Inc"]
+        edges += [("Zorblatt Industries Inc", "Zorblatt"),
+                  ("Sonexa Corporation", "Zorblatt")]
+    scored = spark.sparkContext.accumulator(0)
+
+    def count(batches):
+        for batch in batches:
+            scored.add(len(batch))
+            yield batch
+
+    surfaces = spark.createDataFrame([(n,) for n in names], "surface string")
+    cd = spark.createDataFrame(company_universe())
+    linked = link_surfaces(surfaces, cd).mapInPandas(count, schema=LINKED_SCHEMA)
+    s2e = canonicalize_unmatched(
+        linked,
+        spark.createDataFrame(edges, "target string, alias string"),
+    )
+    first = sorted(map(tuple, s2e.collect()))
+    assert sorted(map(tuple, s2e.collect())) == first
+    assert s2e.count() == len(names)
+    assert scored.value == len(names)
+    # dictionary matches keep their own LEI, even joined by an alias edge
+    ids = dict(first)
+    lei = {r["surface"]: r["entity_id"]
+           for r in link_surfaces(surfaces, cd).collect()}
+    assert all(ids[n] == lei[n] is not None for n in names[:3])
+    if with_unmatched:
+        assert (ids["Zorblatt"] == ids["Zorblatt Industries Inc"]
+                == lei["Sonexa Corporation"])
+        assert ids["Lonely Startup Inc"].startswith("SF:")
