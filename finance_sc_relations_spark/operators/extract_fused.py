@@ -7,9 +7,11 @@ twice. Profiling showed Arrow serialization dominating CPU, so the hot path
 fuses both into one mapInPandas: tagged strings never leave the Python
 worker — only the (r_id, entity1, entity2, scores) rows do.
 
-The unfused operators remain the public API (pairs are a real intermediate
-for debugging/eval); run_pipeline picks the fused path by default
-(PipelineConfig.fuse_extraction)."""
+This is the pipeline's only extraction path (plans.pipeline: the `pairs`
+stage holds these scored-position rows, `classified` aggregates them). The
+unfused operators remain public: they are the composable reference the
+fused path is tested against, and their tagged pairs are a real
+intermediate for debugging/eval."""
 
 from __future__ import annotations
 

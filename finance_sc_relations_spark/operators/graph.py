@@ -152,10 +152,13 @@ def build_edges_global(
 
 
 def build_vertices(
-    linked_triples: DataFrame, surface_to_entity: DataFrame
+    linked_triples: DataFrame, surface_to_entity: DataFrame | None = None
 ) -> DataFrame:
     """Vertex table: one row per canonical entity with observed aliases
-    (alias-item analog, reporter.py:359-384)."""
+    (alias-item analog, reporter.py:359-384). Vertices come from
+    linked_triples alone (every endpoint's surface and id), so a resumed
+    linked_triples table is enough; surface_to_entity is accepted for
+    callers that pass it and is not read."""
     used = (
         linked_triples.select(F.col("subj_id").alias("entity_id"),
                               F.col("subj_surface").alias("surface"))

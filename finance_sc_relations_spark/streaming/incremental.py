@@ -20,6 +20,8 @@ engine a streaming ingest path for the same logical pipeline:
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,7 +63,8 @@ def stream_extract_triples(
     if cfg.distributed_linking is None:
         # the dict arrives as a pandas frame here — by definition broadcast
         # sized; pin the tier so no micro-batch pays a dispatch count() job
-        cfg.distributed_linking = False
+        # (on a copy: the caller's config is left as it was)
+        cfg = replace(cfg, distributed_linking=False)
     stream = stream_pages(spark, pages_dir)
     company_dict = spark.createDataFrame(company_dict_pdf)
 

@@ -10,6 +10,7 @@ from finance_sc_relations_spark.streaming.incremental import (
     stream_extract_triples,
 )
 from finance_sc_relations_spark.fixtures import generate_corpus
+from finance_sc_relations_spark.plans.pipeline import PipelineConfig
 
 
 def test_catalog_roundtrip_and_partition_overwrite(spark, tmp_path):
@@ -83,14 +84,17 @@ def test_stream_extract_triples_end_to_end(spark, tmp_path):
 
     out_dir = str(tmp_path / "triples_out")
     ckpt = str(tmp_path / "stream_ckpt")
+    cfg = PipelineConfig()
     writer = stream_extract_triples(
-        spark, str(src), companies_pdf, out_dir, ckpt
+        spark, str(src), companies_pdf, out_dir, ckpt, config=cfg
     )
     q = writer.start()
     q.awaitTermination(300)
     got = spark.read.parquet(out_dir)
     n1 = got.count()
     assert n1 > 0
+    # the stream pins its linking tier on a copy, not the caller's config
+    assert cfg.distributed_linking is None
 
     # replay: checkpoint prevents reprocessing
     q2 = stream_extract_triples(

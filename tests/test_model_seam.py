@@ -44,10 +44,10 @@ def test_broadcast_model_drives_fused_pipeline(spark):
     assert (abs(cls["score"] - 0.9) < 1e-6).all()
 
 
-def test_broadcast_model_drives_unfused_path_and_is_deterministic(spark):
+def test_broadcast_model_drives_unfused_path_and_is_deterministic(
+        spark, unfused_classified):
     pages_pdf, _, companies_pdf = generate_corpus(20)
     cfg = PipelineConfig(
-        fuse_extraction=False,
         reverse=False,
         re_model_broadcast=_bc(spark, [0.05, 0.9, 0.05], model_id="const-cus"),
     )
@@ -59,12 +59,15 @@ def test_broadcast_model_drives_unfused_path_and_is_deterministic(spark):
             spark.createDataFrame(companies_pdf),
             cfg,
         )
-        runs.append(
+        fused, unfused = (
             sorted(
                 (r["r_id"], r["relation"], round(r["score"], 6))
-                for r in out["classified"].collect()
+                for r in df.collect()
             )
+            for df in (out["classified"], unfused_classified(out, cfg))
         )
+        assert fused == unfused
+        runs.append(unfused)
     assert runs[0] == runs[1]  # deterministic across runs
     assert all(rel == "customer" for _, rel, _ in runs[0])
 
@@ -79,7 +82,8 @@ def test_model_from_broadcast_caches_per_model_id(spark):
     assert out.shape == (2, 3)
 
 
-def test_checkpoint_file_model_drives_both_paths(spark, tmp_path):
+def test_checkpoint_file_model_drives_both_paths(spark, tmp_path,
+                                                 unfused_classified):
     """The model.pth.tar flow (infer.py:67-133): a checkpoint FILE loaded
     once per executor (keyed by path+mtime) drives the pipeline on the fused
     AND unfused paths — the broadcast seam's sibling for --files / shared-fs
@@ -103,17 +107,15 @@ def test_checkpoint_file_model_drives_both_paths(spark, tmp_path):
 
     save_model_checkpoint(ckpt, ConstantModel([0.05, 0.9, 0.05]))
     pages_pdf, _, companies_pdf = generate_corpus(20)
-    for fused in (True, False):
-        cfg = PipelineConfig(
-            fuse_extraction=fused, reverse=False, re_model_path=ckpt
-        )
-        out = run_pipeline(
-            spark,
-            spark.createDataFrame(pages_pdf),
-            spark.createDataFrame(companies_pdf),
-            cfg,
-        )
-        cls = out["classified"].select("relation", "score").toPandas()
+    cfg = PipelineConfig(reverse=False, re_model_path=ckpt)
+    out = run_pipeline(
+        spark,
+        spark.createDataFrame(pages_pdf),
+        spark.createDataFrame(companies_pdf),
+        cfg,
+    )
+    for classified in (out["classified"], unfused_classified(out, cfg)):
+        cls = classified.select("relation", "score").toPandas()
         assert len(cls) > 0 and set(cls["relation"]) == {"customer"}
         assert (abs(cls["score"] - 0.9) < 1e-6).all()
 

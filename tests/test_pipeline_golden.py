@@ -116,21 +116,23 @@ def test_html_fallback_extraction(spark):
     assert rows[0]["obj_surface"] == "Veltrix Systems Inc"
 
 
-def test_fused_equals_unfused_extraction(spark, fixture_corpus):
-    """The fused tagging+scoring path must be semantically identical to the
-    composable two-stage path."""
+def test_fused_equals_unfused_extraction(spark, fixture_corpus,
+                                        unfused_classified):
+    """The fused tagging+scoring path run_pipeline takes must be
+    semantically identical to the composable two-stage path."""
     from finance_sc_relations_spark.plans.pipeline import PipelineConfig, run_pipeline
 
     pages_pdf, _, companies_pdf = fixture_corpus
     pages = spark.createDataFrame(pages_pdf.head(80))
     cd = spark.createDataFrame(companies_pdf)
-    key = ["sentence_id", "r_id", "subj_id", "obj_id", "score"]
-    a = run_pipeline(spark, pages, cd, PipelineConfig(fuse_extraction=True))[
-        "linked_triples"].toPandas()
-    b = run_pipeline(spark, pages, cd, PipelineConfig(fuse_extraction=False))[
-        "linked_triples"].toPandas()
-    assert sorted(map(tuple, a[key].values.tolist())) == sorted(
-        map(tuple, b[key].values.tolist())
+    cfg = PipelineConfig()
+    out = run_pipeline(spark, pages, cd, cfg)
+    key = ["sentence_id", "r_id", "entity1", "entity2", "relation", "score"]
+    a = out["classified"].select(*key).toPandas()
+    b = unfused_classified(out, cfg).select(*key).toPandas()
+    assert len(a) > 0
+    assert sorted(map(tuple, a.values.tolist())) == sorted(
+        map(tuple, b.values.tolist())
     )
 
 

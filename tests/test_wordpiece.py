@@ -144,9 +144,11 @@ def test_tag_and_score_truncation_drop_fused(spark, re_tok_bc):
     assert acc2.value == 0
 
 
-def test_fused_unfused_tokenizer_paths_agree(spark, re_tok_bc, fixture_corpus):
-    """The tokenizer gate drops the same rows and yields the same triples
-    through both extraction paths (run_pipeline fuse_extraction=True/False)."""
+def test_fused_unfused_tokenizer_paths_agree(spark, re_tok_bc, fixture_corpus,
+                                             unfused_classified):
+    """The tokenizer gate drops the same rows and yields the same relations
+    through both extraction paths (run_pipeline's fused path and the
+    two-stage reference over the same gated sentences)."""
     from finance_sc_relations_spark.plans.pipeline import (
         PipelineConfig,
         run_pipeline,
@@ -155,26 +157,14 @@ def test_fused_unfused_tokenizer_paths_agree(spark, re_tok_bc, fixture_corpus):
     pages_pdf, _, companies_pdf = fixture_corpus
     pages = spark.createDataFrame(pages_pdf.head(40))
     cd = spark.createDataFrame(companies_pdf)
-    outs = []
-    for fused in (True, False):
-        cfg = PipelineConfig(
-            fuse_extraction=fused,
-            re_tokenizer_broadcast=re_tok_bc,
-            re_max_length=512,
-        )
-        out = run_pipeline(spark, pages, cd, cfg)
-        outs.append(
-            sorted(
-                map(
-                    tuple,
-                    out["linked_triples"]
-                    .select("sentence_id", "subj_id", "pred", "obj_id")
-                    .distinct()
-                    .collect(),
-                )
-            )
-        )
-    assert outs[0] == outs[1] and len(outs[0]) > 0
+    cfg = PipelineConfig(re_tokenizer_broadcast=re_tok_bc, re_max_length=512)
+    out = run_pipeline(spark, pages, cd, cfg)
+    key = ("r_id", "relation", "score")
+    fused, unfused = (
+        sorted(map(tuple, df.select(*key).collect()))
+        for df in (out["classified"], unfused_classified(out, cfg))
+    )
+    assert fused == unfused and len(fused) > 0
 
 
 def test_score_ids_batch_seam(spark, re_tok_bc):
